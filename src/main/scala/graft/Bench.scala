@@ -43,10 +43,17 @@ object Bench {
     } catch { case _: Throwable => () }
     // Two timed passes, report the per-query MIN: a single-run number can't
     // distinguish a regression from JVM/GC noise in a ~80-query session.
+    // A query that throws keeps its elapsed time in every existing key
+    // (their shape stays byte-compatible) but is named on stderr and in
+    // the additions-only "failed" array, so it never reads as fast.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def timedPass(): Map[String, Double] = SparkEntry.queries.map {
       case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+        }
         name -> (System.nanoTime() - t0) / 1e9
     }
     val first = timedPass()
@@ -77,18 +84,19 @@ object Bench {
           math.ceil(p * sorted.length).toInt - 1).max(0))
       }
     val (p50, p95) = (pct(0.50), pct(0.95))
-    println(s"""{"metric":"total","value":$total,"unit":"sec","p50":$p50,"p95":$p95,"first_total":$firstTotal,"queries":$qs,"first":$firstQs,"sf":"$sfDir"}""")
+    val failedJs = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","p50":$p50,"p95":$p95,"first_total":$firstTotal,"queries":$qs,"first":$firstQs,"sf":"$sfDir","failed":$failedJs}""")
     // Machine-diffable per-query record (the driver's tail capture can
     // truncate the line above): overwritten every run; snapshot per round
     // under bench_history/ to track regressions across rounds.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LAST_QUERIES.json"),
-      s"""{"sf":"$sfDir","total":$total,"p50":$p50,"p95":$p95,"first_total":$firstTotal,"queries":$qs,"first":$firstQs}""")
+      s"""{"sf":"$sfDir","total":$total,"p50":$p50,"p95":$p95,"first_total":$firstTotal,"queries":$qs,"first":$firstQs,"failed":$failedJs}""")
     catch { case _: Throwable => () }
     // The per-query line above can exceed a tail-capture window (the
     // driver keeps the END of stdout), so repeat the headline LAST as a
     // short self-contained record — whatever window survives contains it.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","p50":$p50,"p95":$p95,"first_total":$firstTotal,"n_queries":${results.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","p50":$p50,"p95":$p95,"first_total":$firstTotal,"n_queries":${results.size},"sf":"$sfDir","failed":$failedJs}""")
     spark.stop()
   }
 }

@@ -582,17 +582,22 @@ class CorpusStore private (val spark: SparkSession, val path: String,
     * CHUNKS pointer flip publishes data and params together: a crash
     * mid-build can never leave a new generation served with the old
     * dim (the silent-truncation garbage-ranking hazard). */
-  private def chunkParams: (Int, Int, Int) = {
-    val gen = currentChunkGen.getOrElse(throw new IllegalStateException(
-      s"no chunk index under $path — call buildChunkIndex() first"))
+  private def chunkParams: (Int, Int, Int) =
+    chunkParamsOf(currentChunkState._1)
+
+  private def chunkParamsOf(gen: Long): (Int, Int, Int) = {
     val p = Fs.readString(spark,
         s"${Snapshots.versionPath(path, "chunks", gen)}/_PARAMS").trim
       .split("\\s+").map(_.toInt)
     (p(0), p(1), p(2))
   }
 
-  private def currentChunkGen: Option[Long] =
-    Snapshots.current(spark, path, "CHUNKS")
+  /** The CHUNKS pointer's (version, delta count); throws when no chunk
+    * index was built. */
+  private def currentChunkState: (Long, Long) =
+    Snapshots.currentWithDeltas(spark, path, "CHUNKS")
+      .getOrElse(throw new IllegalStateException(
+        s"no chunk index under $path — call buildChunkIndex() first"))
 
   /** Build + persist the RAG chunk index from the current corpus
     * snapshot — the e04 pipeline (slide-chunk → feature-hash embed)
@@ -701,9 +706,9 @@ class CorpusStore private (val spark: SparkSession, val path: String,
   def compactChunkIndex(): Unit =
     Snapshots.currentWithDeltas(spark, path, "CHUNKS").foreach {
       case (v, k) if k > 0 =>
-        val (w, st, dm) = chunkParams
+        val (w, st, dm) = chunkParamsOf(v)
         val dir = Snapshots.versionPath(path, "chunks", v + 1)
-        chunkTable.write.mode("overwrite").parquet(dir)
+        chunkTableAt(v, k).write.mode("overwrite").parquet(dir)
         Fs.writeStringAtomic(spark, s"$dir/_PARAMS", s"$w $st $dm")
         Fs.writeStringAtomic(spark, s"$path/CHUNKS", (v + 1).toString)
         Snapshots.prune(spark, path, "chunks", v, k)
@@ -716,9 +721,13 @@ class CorpusStore private (val spark: SparkSession, val path: String,
     * n_chunk_toks, chunk_text, vector). Overlay work is proportional to
     * delta rows — the base-sized side is one anti-join probe. */
   def chunkTable: DataFrame = {
-    val (v, k) = Snapshots.currentWithDeltas(spark, path, "CHUNKS")
-      .getOrElse(throw new IllegalStateException(
-        s"no chunk index under $path — call buildChunkIndex() first"))
+    val (v, k) = currentChunkState
+    chunkTableAt(v, k)
+  }
+
+  /** [[chunkTable]] for one observed pointer state (version `v` with `k`
+    * deltas). */
+  private def chunkTableAt(v: Long, k: Long): DataFrame = {
     val base = spark.read.parquet(Snapshots.versionPath(path, "chunks", v))
     if (k == 0L) base
     else {
@@ -763,12 +772,14 @@ class CorpusStore private (val spark: SparkSession, val path: String,
     // rule). A DELTA-FREE generation is a plain parquet scan whose two
     // consumers share the file scan with pushdown — eagerly
     // checkpointing it copied the whole chunk table into executor
-    // storage per serve (r16: ~40 % of e06's steady-state wall)
-    val chainLen = Snapshots
-      .currentWithDeltas(spark, path, "CHUNKS").map(_._2).getOrElse(0L)
-    val raw = chunkTable
+    // storage per serve (r16: ~40 % of e06's steady-state wall). The
+    // pointer is read ONCE: view, checkpoint decision and hash dim all
+    // come from the same (version, deltas), so a concurrent refresh or
+    // rebuild can't pair one generation's chunks with another's dim.
+    val (v, chainLen) = currentChunkState
+    val raw = chunkTableAt(v, chainLen)
     val view = if (chainLen > 0) raw.localCheckpoint() else raw
-    val dim = chunkParams._3
+    val dim = chunkParamsOf(v)._3
     val qvec = TextFeaturizer.featureHash(queries, dim,
         idCol = "query_id", textCol = "text")
       .select(col("id").as("query_id"), col("vector").as("query_vec"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 import graft.operators._
-import graft.util.{Fs, Snapshots}
+import graft.util.{Artifacts, Fs, Snapshots}
 
 /** The user-facing store API — a drop-in functional replacement for the
   * reference's driver facade (`driver/driver.ts`): open-or-create
@@ -597,30 +597,16 @@ class VectorStore private (
     * filtered decision size, [[searchAnnSeededIvf]]'s probe escalation):
     * each is one narrow column-pruned job, but PER CALL — a serving
     * deployment re-issuing the same predicate pays it once per table
-    * version instead. Keys carry the pointer state, so any mutation
-    * (new version OR new delta) invalidates by key change; entries are
-    * Longs, growth is bounded by distinct (version, predicate) pairs. */
-  private[graft] val countMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+    * version instead. Entries follow the CURRENT pointer, so any
+    * mutation (new version OR new delta) invalidates them;
+    * [[pqCountMemo]] holds the counts that follow PQINDEX. */
+  private[graft] val countMemo = new Artifacts.LatestStamp[Long](_ => ())
+  private val pqCountMemo = new Artifacts.LatestStamp[Long](_ => ())
   private[graft] def pointerStamp(pointer: String): String =
     Snapshots.currentWithDeltas(spark, path, pointer)
       .map { case (v, k) => s"$v $k" }.getOrElse("none")
-  /** Drop memo entries keyed by a superseded pointer stamp — a
-    * long-running serving process with continuous ingest would otherwise
-    * grow one dead entry per (stamp, predicate) forever. Keys are
-    * consistently (stamp, tag); live stamps are the two pointers' current
-    * ones. Returns the current CURRENT stamp. */
-  private def evictStaleMemos(): String = {
-    val cur = pointerStamp("CURRENT")
-    val pq = pointerStamp("PQINDEX")
-    countMemo.keys.foreach { case k @ (s, _) =>
-      if (s != cur && s != pq) { countMemo.remove(k); () } }
-    statsMemo.keys.foreach { k =>
-      if (k != cur) { statsMemo.remove(k); () } }
-    cur
-  }
   private def memoCount(tag: String, df: => DataFrame): Long =
-    countMemo.getOrElseUpdate((evictStaleMemos(), tag), df.count())
+    countMemo(pointerStamp("CURRENT"), tag)(df.count())
   private def liveCount: Long =
     memoCount("__live", nodes.filter(!col("deleted")))
   private def filteredCount(p: Column): Long =
@@ -631,9 +617,9 @@ class VectorStore private (
     * jobs collapse to a map read on repeated calls against an unchanged
     * table. */
   private val statsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Double)]
+    new Artifacts.LatestStamp[(Long, Double)](_ => ())
   private def memoStats(): (Long, Double) =
-    statsMemo.getOrElseUpdate(evictStaleMemos(),
+    statsMemo(pointerStamp("CURRENT"), "stats")(
       AdaptiveSearch.stats(nodes, params))
 
   /** Selectivity-escalated probe count for the seeded-graph arm: probe
@@ -646,9 +632,8 @@ class VectorStore private (
       centroids: DataFrame): Int = predicate match {
     case None => nProbe
     case Some(p) =>
-      // consistent (stamp, tag) key order with every other memo entry
-      val cells = countMemo.getOrElseUpdate(
-        (pointerStamp("PQINDEX"), "__cells"), centroids.count())
+      val cells = pqCountMemo(pointerStamp("PQINDEX"), "__cells")(
+        centroids.count())
       AnnSearch.escalatedProbes(nProbe, filteredCount(p), liveCount, cells)
   }
 
@@ -754,24 +739,20 @@ class VectorStore private (
     * projections per batch. Generations/deltas written before the chain
     * existed fall back to that recomputation (the pre-chain behavior);
     * the next compaction writes the table and upgrades the store. */
-  private val overlayMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame, DataFrame, IndexParams)]
+  private val overlayMemo = new Artifacts.LatestStamp[
+    (DataFrame, DataFrame, DataFrame, IndexParams)](_ => ())
+  // memoized per INDEX pointer stamp: the chain-presence overlay pays ~3
+  // eager localCheckpoint jobs per LOAD (delta-sized relations that
+  // serving re-executes ~4×/call if left lazy) — a serving process
+  // re-issuing queries through an UNCHANGED chain reuses the
+  // already-checkpointed relations and the fixed per-serve overlay cost
+  // disappears after the first call. Any mutation flips the pointer →
+  // new stamp → fresh overlay; stale stamps are released without an
+  // unpersist (their checkpointed blocks unpersist with GC, their
+  // base-side scans point at dirs the prune may reclaim post-grace).
   private def loadIndexOverlayFull()
-      : (DataFrame, DataFrame, DataFrame, IndexParams) = {
-    // memoized per INDEX pointer stamp (the countMemo rule): the
-    // chain-presence overlay pays ~3 eager localCheckpoint jobs per
-    // LOAD (delta-sized relations that serving re-executes ~4×/call if
-    // left lazy) — a serving process re-issuing queries through an
-    // UNCHANGED chain reuses the already-checkpointed relations and the
-    // fixed per-serve overlay cost disappears after the first call. Any
-    // mutation flips the pointer → new stamp → fresh overlay; stale
-    // stamps evict (their checkpointed blocks unpersist with GC, their
-    // base-side scans point at dirs the prune may reclaim post-grace).
-    val stamp = pointerStamp("INDEX")
-    overlayMemo.keys.foreach { s =>
-      if (s != stamp) { overlayMemo.remove(s); () } }
-    overlayMemo.getOrElseUpdate(stamp, computeIndexOverlayFull())
-  }
+      : (DataFrame, DataFrame, DataFrame, IndexParams) =
+    overlayMemo(pointerStamp("INDEX"), "overlay")(computeIndexOverlayFull())
 
   private def computeIndexOverlayFull()
       : (DataFrame, DataFrame, DataFrame, IndexParams) = {
@@ -1212,20 +1193,16 @@ class VectorStore private (
     * superseded snapshots unpersist on eviction so a document-churning
     * server holds ONE postings relation. */
   private val postingsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    new Artifacts.LatestStamp[DataFrame](_.unpersist(blocking = false))
   private def servingPostings(): DataFrame = {
     val stampV = currentAux("DOCS").getOrElse(
       throw new IllegalStateException(
         s"no documents under $path — call putDocuments() first"))
-    val stamp = stampV.toString
-    postingsMemo.keys.foreach { s =>
-      if (s != stamp)
-        postingsMemo.remove(s).foreach(_.unpersist(blocking = false)) }
     // build from the STAMPED snapshot directory, not the mutable
     // `documents` pointer: a concurrent putDocuments between the stamp
     // read and the corpus read would otherwise cache postings built
     // from one snapshot under the other's stamp
-    postingsMemo.getOrElseUpdate(stamp,
+    postingsMemo(stampV.toString, "postings")(
       Retrieval.bm25Postings(spark.read.parquet(
           graft.util.Snapshots.versionPath(path, "docs", stampV)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -1575,24 +1552,17 @@ class VectorStore private (
     * delta blocks die by ContextCleaner weak-ref, the [[overlayMemo]]
     * rule). Lifecycle paths (appends, compaction, drift) keep the
     * long-form [[loadPqIndex]]. */
-  private[graft] val pqBasePackedMemo = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  private[graft] val pqServingMemo = scala.collection.concurrent.TrieMap
-    .empty[String, AdaptiveSearch.PqPrebuilt]
+  private[graft] val pqBasePackedMemo =
+    new Artifacts.LatestStamp[DataFrame](_.unpersist(blocking = false))
+  private[graft] val pqServingMemo =
+    new Artifacts.LatestStamp[AdaptiveSearch.PqPrebuilt](_ => ())
   private[graft] def servingPqIndex(): AdaptiveSearch.PqPrebuilt = {
     val (v, k) = Snapshots.currentWithDeltas(spark, path, "PQINDEX")
       .getOrElse(throw new IllegalStateException(
         s"no PQ index under $path — call buildPqIndex() first"))
-    val stamp = s"$v $k"
-    pqServingMemo.keys.foreach { s =>
-      if (s != stamp) { pqServingMemo.remove(s); () } }
-    val baseKey = v.toString
-    pqBasePackedMemo.keys.foreach { s =>
-      if (s != baseKey)
-        pqBasePackedMemo.remove(s).foreach(_.unpersist(blocking = false)) }
-    pqServingMemo.getOrElseUpdate(stamp, {
+    pqServingMemo(s"$v $k", "serving") {
       val dir = pqDir(v)
-      val packedBase = pqBasePackedMemo.getOrElseUpdate(baseKey, {
+      val packedBase = pqBasePackedMemo(v.toString, "packed") {
         // generations since the build-time pack ship codes_packed —
         // the base load is then a parquet scan, and the groupBy pack
         // survives only as the pre-upgrade fallback
@@ -1600,7 +1570,7 @@ class VectorStore private (
         (if (Fs.exists(spark, packedDir)) spark.read.parquet(packedDir)
          else PqIndex.packCodes(spark.read.parquet(s"$dir/codes")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      }
       val centroids = spark.read.parquet(s"$dir/centroids")
       val codebooks = spark.read.parquet(s"$dir/codebooks")
       val baseAsg = spark.read.parquet(s"$dir/assignments")
@@ -1620,7 +1590,7 @@ class VectorStore private (
               .unionByName(PqIndex.packCodes(
                 liveRows.select(col("id"), col("sub"), col("code")))))
       }
-    })
+    }
   }
 
   /** Fold `delta` (id, vector[, deleted]) into the persisted PQ
@@ -1745,8 +1715,8 @@ class VectorStore private (
     validate(queries, "query_id", "query_vec")
     val pre = servingPqIndex()
     val mSub = PqIndex.subspaces(params.dim)
-    val cells = countMemo.getOrElseUpdate(
-      (pointerStamp("PQINDEX"), "__cells"), pre.centroids.count())
+    val cells = pqCountMemo(pointerStamp("PQINDEX"), "__cells")(
+      pre.centroids.count())
     // nProbe = 0 (the default) means AUTO: probe ≥ 1/32 of the
     // generation's cells ([[operators.PqIndex.adaptiveNProbe]]) — the
     // probed FRACTION must not collapse as builds grow cells with √n
@@ -1821,15 +1791,14 @@ class VectorStore private (
     graft.functions.VectorFunctions.register(spark)
     validate(queries, "query_id", "query_vec")
     val pre = servingPqIndex()
-    val cells = countMemo.getOrElseUpdate(
-      (pointerStamp("PQINDEX"), "__cells"), pre.centroids.count())
+    val cells = pqCountMemo(pointerStamp("PQINDEX"), "__cells")(
+      pre.centroids.count())
     val np = if (nProbe > 0) nProbe else PqIndex.adaptiveNProbe(8, cells)
     val short =
       if (shortlist > 0) shortlist
       else PqIndex.adaptiveShortlist(k, liveCount, np, cells)
     val mSub = PqIndex.subspaces(params.dim)
-    val ksub = countMemo.getOrElseUpdate(
-      (pointerStamp("PQINDEX"), "__ksub"),
+    val ksub = pqCountMemo(pointerStamp("PQINDEX"), "__ksub")(
       pre.codebooks.agg(max(col("code")).cast("long")).head().getLong(0)
         + 1L).toInt
     val rows = ChunkedServe.pqChunkRows(np, mSub, ksub, short,

@@ -432,44 +432,24 @@ object AnnSearch {
       queryCount, params.m)
   }
 
-  /** The shared second half of every seeded hybrid: bounded level-0
-    * frontier expansions from `seeds`, then one true-metric rank over
-    * seeds ∪ expansions (so the hybrid can never do worse than its
-    * seeds). `nodes` must carry `deleted` (tombstones routable mid-walk,
-    * filtered from results).
+  /** The per-query ranking and the BOUNDED-FRONTIER broadcast gates
+    * shared by both walks ([[expandAndRank]], [[searchGraph]]).
     *
-    * Filtered-walk contract (`idFilter`): expansion CANDIDATES restrict
-    * to the filtered set before scoring — the frontier holds only
-    * matching nodes, so a selective predicate can never crowd matching
-    * candidates out of the ef window with non-matching high scorers,
-    * results are provably ⊆ the filtered set, and per-hop work shrinks
-    * with the filtered fraction. The trade is that the walk does not
-    * route THROUGH non-matching nodes (their out-edges never fire); the
-    * filtered seed probe carries the recall — it lands in every probed
-    * cell/bucket independent of graph connectivity — and expansions add
-    * matching neighbors of matching seeds. Under very selective
-    * predicates raise nProbe/ef rather than relying on the walk. */
-  /** `queryCount` ≥ 0 arms the BOUNDED-FRONTIER broadcast gates (r15,
-    * guide §2.4/§3.1): the frontier is ≤ Q × ef narrow rows BY
-    * CONSTRUCTION (every hop re-caps it through the top-ef window) and
-    * the per-hop expansion is ≤ Q × ef × edgeCap rows (the build caps
-    * out-degree at M), so when those ARITHMETIC bounds fit
-    * `broadcastBytes` the hop joins broadcast the query-proportional
-    * side and the CORPUS-side relations (edge table, node re-attach)
-    * are never shuffled — without the gate every hop planned a
-    * sort-merge join that re-shuffled the edge and node tables because
-    * a checkpointed frontier has no usable stats. At 100 TB this is the
-    * difference between hops costing O(frontier) network and hops
-    * re-shuffling the graph per hop; past the gate the joins keep the
-    * old stats-driven shape. Callers that know Q (one memoized count)
-    * pass it; −1 keeps the pre-r15 plan exactly. */
-  private def expandAndRank(nodes: DataFrame, edges: DataFrame,
-      seeds: DataFrame, queries: DataFrame, k: Int, minSim: Double,
-      metric: String, ef: Int, iters: Int,
-      broadcastBytes: Long,
-      idFilter: Option[DataFrame] = None,
-      queryCount: Long = -1L, edgeCap: Int = 0): DataFrame = {
-    val sf = scoreFn(metric)
+    * `queryCount` ≥ 0 arms the gates (r15, guide §2.4/§3.1): the
+    * frontier is ≤ Q × ef narrow rows BY CONSTRUCTION (every hop re-caps
+    * it through the top-ef window) and the per-hop expansion is
+    * ≤ Q × ef × edgeCap rows (the build caps out-degree at M), so when
+    * those ARITHMETIC bounds fit `broadcastBytes` the hop joins
+    * broadcast the query-proportional side and the CORPUS-side relations
+    * (edge table, node re-attach) are never shuffled — without the gate
+    * every hop planned a sort-merge join that re-shuffled the edge and
+    * node tables because a checkpointed frontier has no usable stats.
+    * At 100 TB this is the difference between hops costing O(frontier)
+    * network and hops re-shuffling the graph per hop; past the gate the
+    * joins keep the old stats-driven shape. Callers that know Q (one
+    * memoized count) pass it; −1 keeps the pre-r15 plan exactly. */
+  private final class WalkRank(queryCount: Long, ef: Int, edgeCap: Int,
+      broadcastBytes: Long) {
     val topW = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("id").asc)
     def topEf(df: DataFrame, n: Int): DataFrame =
@@ -490,6 +470,36 @@ object AnnSearch {
     val candFits = queryCount >= 0 && edgeCap > 0 &&
       queryCount * ef.toLong * edgeCap.toLong * 24L * BroadcastOverheadX <=
         broadcastBytes
+  }
+
+  /** The shared second half of every seeded hybrid: bounded level-0
+    * frontier expansions from `seeds`, then one true-metric rank over
+    * seeds ∪ expansions (so the hybrid can never do worse than its
+    * seeds). `nodes` must carry `deleted` (tombstones routable mid-walk,
+    * filtered from results).
+    *
+    * Filtered-walk contract (`idFilter`): expansion CANDIDATES restrict
+    * to the filtered set before scoring — the frontier holds only
+    * matching nodes, so a selective predicate can never crowd matching
+    * candidates out of the ef window with non-matching high scorers,
+    * results are provably ⊆ the filtered set, and per-hop work shrinks
+    * with the filtered fraction. The trade is that the walk does not
+    * route THROUGH non-matching nodes (their out-edges never fire); the
+    * filtered seed probe carries the recall — it lands in every probed
+    * cell/bucket independent of graph connectivity — and expansions add
+    * matching neighbors of matching seeds. Under very selective
+    * predicates raise nProbe/ef rather than relying on the walk. */
+  /** `queryCount` ≥ 0 arms the bounded-frontier broadcast gates
+    * ([[WalkRank]]). */
+  private def expandAndRank(nodes: DataFrame, edges: DataFrame,
+      seeds: DataFrame, queries: DataFrame, k: Int, minSim: Double,
+      metric: String, ef: Int, iters: Int,
+      broadcastBytes: Long,
+      idFilter: Option[DataFrame] = None,
+      queryCount: Long = -1L, edgeCap: Int = 0): DataFrame = {
+    val sf = scoreFn(metric)
+    val walk = new WalkRank(queryCount, ef, edgeCap, broadcastBytes)
+    import walk._
     val qvs = KnnSearch.maybeBroadcast(
       queries.select(col("query_id"), col("query_vec")), broadcastBytes)
     val e0 = edges.filter(col("level") === 0).select(col("src"), col("dst"))
@@ -572,24 +582,8 @@ object AnnSearch {
       routedOnly: Boolean = false,
       queryCount: Long = -1L): DataFrame = {
     val sf = scoreFn(params.metric)
-    val topW = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("id").asc)
-    def topEf(df: DataFrame, n: Int): DataFrame =
-      df.withColumn("rn", row_number().over(topW)).filter(col("rn") <= n).drop("rn")
-    // the [[expandAndRank]] bounded-frontier gates (r15): frontier
-    // ≤ Q × ef and per-hop expansion ≤ Q × ef × M by construction, so
-    // when the arithmetic bound fits, hop joins broadcast the
-    // query-proportional side and never shuffle the edge/node tables
-    def dedupTopEf(df: DataFrame, n: Int): DataFrame =
-      topEf(df.repartition(
-          boundedPartitions(nodes.sparkSession, queryCount, ef),
-          col("query_id"))
-        .dropDuplicates("query_id", "id"), n)
-    val frontierFits = queryCount >= 0 &&
-      queryCount * ef.toLong * 32L * BroadcastOverheadX <= broadcastBytes
-    val candFits = queryCount >= 0 &&
-      queryCount * ef.toLong * params.m.toLong * 24L * BroadcastOverheadX <=
-        broadcastBytes
+    val walk = new WalkRank(queryCount, ef, params.m, broadcastBytes)
+    import walk._
 
     val withDel =
       if (nodes.columns.contains("deleted")) nodes
@@ -634,6 +628,9 @@ object AnnSearch {
     // barrier-bound, it is per-hop work + planning, and deferring
     // materialization only stacked the cold path deeper. Keep the
     // eager form; don't re-prototype.
+    // hops run top-down: one per level above 0, then itersPerLevel
+    val totalHops = entryLevel + itersPerLevel
+    var hop = 0
     var hopsSinceCp = 0
     for (level <- entryLevel to 0 by -1) {
       val e = edges.filter(col("level") === level)
@@ -667,9 +664,15 @@ object AnnSearch {
           .withColumn("score", sf(col("query_vec"), col("vector")))
           .select(col("query_id"), col("id"), col("score"))
         cur = dedupTopEf(cur.unionByName(expanded), levelEf)
+        hop += 1
         hopsSinceCp += 1
-        val lastHop = level == 0 && it == iters
-        if (hopsSinceCp >= 2 && !lastHop) {
+        // cp every 2 hops, AND before the LAST hop when a hop is pending
+        // (the [[expandAndRank]] rule: the final action then holds one
+        // un-checkpointed hop, never a hop subplan executed twice) —
+        // unless the level-0 seed merge checkpoints in between anyway
+        val seedCpNext = level == 1 && !routedOnly
+        if (hop < totalHops &&
+            (hopsSinceCp >= 2 || (hop == totalHops - 1 && !seedCpNext))) {
           cur = cur.localCheckpoint(); hopsSinceCp = 0
         }
       }

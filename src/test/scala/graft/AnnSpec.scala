@@ -285,6 +285,22 @@ class AnnSpec extends SparkSpec {
     assert(got === 0)
   }
 
+  test("graph walk checkpoints before its last hop: the final plan ranks " +
+      "the last hop and the result only") {
+    // a materialized index, as served: its build plan holds no windows
+    val (n0, e0) = IndexBuild.build(nodesDf, params)
+    val (nodes, edges) = (n0.localCheckpoint(), e0.localCheckpoint())
+    val res = AnnSearch.searchGraph(nodes, edges, queriesDf,
+      k = 10, minSim = -2.0, params, ef = 48, itersPerLevel = 2)
+    // hop 2 reads hop 1's frontier twice (union and expansion); without
+    // the checkpoint hop 1's rank would run twice inside the final job
+    val windows = res.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }
+    assert(windows.size === 2, res.queryExecution.optimizedPlan.treeString)
+    assert(recallAt(10, res) > 0.4)
+  }
+
   test("LSH-seeded graph search: recall >= plain LSH at the same ef, " +
       "tombstones excluded from results but routable") {
     val (nodes, edges) = IndexBuild.build(nodesDf, params)

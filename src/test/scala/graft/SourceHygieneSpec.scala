@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Main sources stay text-clean: no raw C0 control bytes (tab/LF/CR
   * excepted). A literal delimiter byte (e.g. the BPE unit separator
   * U+001F) makes grep/diff treat a source file as binary — encode such
-  * characters as `"\u001F"` escapes instead. */
+  * characters as `"\u001F"` escapes instead. Memos go through
+  * `graft.util.Artifacts` only, so a hand-rolled `TrieMap` memo fails
+  * here. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private def scalaFiles(root: Path): Seq[Path] =
@@ -29,5 +31,14 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"raw control bytes found: ${offenders.mkString(", ")}")
+  }
+
+  test("TrieMap appears in src/main only inside graft/util/Artifacts.scala") {
+    val root = Paths.get("src/main/scala")
+    val home = root.resolve("graft/util/Artifacts.scala")
+    val offenders = scalaFiles(root).filter(p => p != home &&
+      new String(Files.readAllBytes(p), "UTF-8").contains("TrieMap"))
+    assert(offenders.isEmpty,
+      s"route memos through graft.util.Artifacts: ${offenders.mkString(", ")}")
   }
 }

@@ -784,10 +784,11 @@ class VectorStoreSpec extends SparkSpec {
       predicate = Some(pred))
     assert(s1 === graft.operators.AdaptiveSearch.UseExact) // 14 live < cutoff
     val key = (store.pointerStamp("CURRENT"), "p:" + pred.toString)
-    assert(store.countMemo.contains(key), s"memo keys: ${store.countMemo.keys}")
+    assert(store.countMemo.entries.contains(key),
+      s"memo keys: ${store.countMemo.entries.keys}")
     // poison the cached size: a second call that RECOUNTED would still
     // pick the exact arm; reading the cache it must dispatch past it
-    store.countMemo.update(key, 100000L)
+    store.countMemo.entries.update(key, 100000L)
     val (s2, _) = store.searchAuto(qv, k = 3, strengthSetting = 0,
       predicate = Some(pred))
     assert(s2 !== graft.operators.AdaptiveSearch.UseExact)
@@ -1193,8 +1194,9 @@ class VectorStoreSpec extends SparkSpec {
 
     store.searchPq(Seq((1L, vec(1L))).toDF("query_id", "query_vec"), 1)
       .collect()
-    assert(store.pqBasePackedMemo.size === 1, "one packed base generation")
-    val (genKey, packedBefore) = store.pqBasePackedMemo.head
+    assert(store.pqBasePackedMemo.entries.size === 1,
+      "one packed base generation")
+    val (genKey, packedBefore) = store.pqBasePackedMemo.entries.head
 
     // three append flips (k: 0→3): the base pack must be the SAME cached
     // relation after every flip — re-packing per stamp was the 136 s
@@ -1209,14 +1211,15 @@ class VectorStoreSpec extends SparkSpec {
       // appended id self-hits through the serving overlay
       assert(store.searchPq(qv, k = 1, strengthSetting = 0)
         .filter(col("query_id") === col("id")).count() === 2)
-      assert(store.pqBasePackedMemo.get(genKey).exists(_ eq packedBefore),
+      assert(store.pqBasePackedMemo.entries.get(genKey)
+          .exists(_ eq packedBefore),
         s"append flip $b re-packed the base")
       assert(packedBefore.storageLevel.useMemory,
         s"append flip $b dropped the base cache")
     }
     // per-stamp composed artifacts never persist (the base IS the cache)
-    assert(store.pqServingMemo.size === 1)
-    assert(store.pqServingMemo.head._2.codes.storageLevel
+    assert(store.pqServingMemo.entries.size === 1)
+    assert(store.pqServingMemo.entries.head._2.codes.storageLevel
       === org.apache.spark.storage.StorageLevel.NONE,
       "composed per-stamp codes must not double-cache the tier")
 
@@ -1227,8 +1230,8 @@ class VectorStoreSpec extends SparkSpec {
       "compactPqIndex must write the new generation's codes_packed")
     store.searchPq(Seq((105L, vec(105L))).toDF("query_id", "query_vec"), 1)
       .collect()
-    assert(store.pqBasePackedMemo.size === 1)
-    assert(!store.pqBasePackedMemo.contains(genKey),
+    assert(store.pqBasePackedMemo.entries.size === 1)
+    assert(!store.pqBasePackedMemo.entries.contains(genKey),
       "superseded generation's base must evict")
     assert(packedBefore.storageLevel
       === org.apache.spark.storage.StorageLevel.NONE,
